@@ -360,7 +360,16 @@ def parse_transcripts(transcripts, frames: FramesLexicon, cfg: PipelineConfig,
     # Distribute the parse stage: a compact parquet scan can yield far fewer
     # input splits than cores (at real scale the Iceberg table is bucketed by
     # conv_id and this becomes a no-op repartition to the bucket count).
-    # Hashing by conv_id also pre-aligns the downstream per-conv windows.
+    # No partition count is given, so the shuffle is REPARTITION_BY_COL and
+    # AQE sizes the parse stage from the bytes it observes (coalescing to
+    # minPartitionSize, at least one task per core on a large input) —
+    # every Python task carries a fixed worker cost (~0.26 s of CPU on a
+    # 4-CPU host) regardless of its row count, so a small input must not
+    # fan out to shuffle.partitions tasks. With AQE off (streaming) this is
+    # shuffle.partitions partitions, as with an explicit count.
+    # The hash does NOT pre-align the downstream per-conv windows: Catalyst
+    # cannot see the partitioning of MapInArrow's output, so the executed
+    # plan re-shuffles by conv_id right after it.
     # The split count is ESTIMATED from file metadata (Spark's own packing
     # formula over inputFiles + maxPartitionBytes/openCostInBytes) — never
     # via ``df.rdd.getNumPartitions()``, which forces an RDD conversion node
@@ -368,7 +377,7 @@ def parse_transcripts(transcripts, frames: FramesLexicon, cfg: PipelineConfig,
     spark = transcripts.sparkSession
     parallelism = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if _estimated_scan_splits(transcripts) < parallelism:
-        transcripts = transcripts.repartition(parallelism, "conv_id")
+        transcripts = transcripts.repartition("conv_id")
 
     narrow = transcripts.select("conv_id",
                                 F.col("turn_idx").cast("int").alias("turn_idx"),

@@ -10,15 +10,19 @@ Composition of the stage functions (SURVEY.md §3 EP1, §7 stage 2):
 
 No custom pipeline framework: each stage is DataFrame -> DataFrame; Catalyst
 owns the physical plan. The parse output is the one intermediate consumed by
-multiple downstream joins — it is localCheckpoint'ed (or written to a
-conv_id-bucketed table at real scale) so the Arrow parse runs exactly once
-over the corpus regardless of plan fan-out.
+multiple downstream joins — when the fan-out warrants it, it is
+localCheckpoint'ed (or written to a conv_id-bucketed table at real scale) so
+the Arrow parse runs exactly once over the corpus. EP2 parses once too: one
+annotated parse with terms, checkpointed, feeds both the EP1 triples (as its
+slim projection) and the sample masking, as AREkit serializes samples from
+the same parsed text it extracts opinions from.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,9 +77,58 @@ def attach_entity_types(mentions: DataFrame, spark: SparkSession,
     """Broadcast value->type lookup (J12 support); unknown values get NULL."""
     if not types:
         return mentions.withColumn("ent_type", F.lit(None).cast("string"))
+    # a pandas frame takes the Arrow path to a LocalTableScan; a Python list
+    # would become a Python RDD and cost worker tasks per plan that reads it
     tdf = spark.createDataFrame(
-        [(k, v) for k, v in sorted(types.items())], "value string, ent_type string")
+        pd.DataFrame(sorted(types.items()), columns=["value", "ent_type"]),
+        "value string, ent_type string")
     return mentions.join(F.broadcast(tdf), "value", "left")
+
+
+def _checkpointed_parse(transcripts: DataFrame, frames_lex: FramesLexicon,
+                        cfg: PipelineConfig, persist: bool,
+                        frame_annot_live: bool) -> DataFrame:
+    """EP1's own parse, materialized ONCE — but only when the plan fan-out
+    warrants it. With the frames branch + J4b annotator live, the triples
+    DAG consumes the parse from up to 7 branches (mention windows, both
+    pair-join sides, the frames table, both expansion sides), and AQE
+    exchange reuse canNOT deduplicate them: per-branch column pruning makes
+    each branch's exchange subtree non-identical, so the executed plan
+    re-runs MapInArrow per branch (measured 7x at sf0.1, 16s -> 4-5s after
+    this checkpoint; 102s -> 62.8s at sf1x8/local[8]). The NO-frames plan
+    has low fan-out (mentions feed the pair self-join + expansion, all
+    reusing one conv_id exchange) and the checkpoint write costs more than
+    the recompute it saves (round-2 regression: kg_triples_noframes 2.68s
+    -> 4.46s at identical semantics; gated A/B at sf0.1 confirms) — so the
+    checkpoint is gated on the frames/J4b branch being live.
+    ``localCheckpoint`` stores the slim row form (no terms column) — unlike
+    a ``persist``, which builds Spark's columnar cache of the nested
+    mention arrays at 5-10x the parse cost in alloc/GC CPU. ``eager=
+    persist`` lets callers that fan out into concurrent writes (runner.py)
+    materialize up front. At real cluster scale the same role is played by
+    writing the parse output to a conv_id-bucketed table (checkpoint
+    blocks are not replicated; lineage is cut deliberately).
+    SPARK_KG_PARSE_CKPT overrides: 1 forces on, 0 forces off, unset/auto
+    gates on the frames fan-out."""
+    import os as _os
+    parsed = parse_transcripts(transcripts, frames_lex, cfg)
+    _ckpt_lever = _os.environ.get("SPARK_KG_PARSE_CKPT", "auto")
+    if _ckpt_lever not in ("auto", ""):
+        _warn_nondefault_lever("SPARK_KG_PARSE_CKPT", _ckpt_lever)
+    do_ckpt = (frame_annot_live if _ckpt_lever in ("auto", "")
+               else _ckpt_lever != "0")
+    if not do_ckpt:
+        return parsed
+    # Project role away BEFORE materializing: the checkpoint defeats
+    # Catalyst column pruning (it stores every column for all 7 consuming
+    # branches), and nothing in EP1 past the parse reads role —
+    # mentions/frames/pairs/expansion key on (conv_id, turn_idx) only.
+    # Without the checkpoint, pruning already removes it, so the no-ckpt
+    # plan needs no change. SPARK_KG_DROP_ROLE=0 reverts for A/B
+    # (BASELINE.md).
+    if _os.environ.get("SPARK_KG_DROP_ROLE", "1") != "0":
+        parsed = parsed.drop("role")
+    return parsed.localCheckpoint(eager=persist)
 
 
 def build_triple_pipeline(spark: SparkSession,
@@ -84,11 +137,17 @@ def build_triple_pipeline(spark: SparkSession,
                           transcripts: DataFrame | None = None,
                           persist: bool = True,
                           frames_override: FramesLexicon | None = None,
-                          strategy: str = "auto"
+                          strategy: str = "auto",
+                          parsed: DataFrame | None = None
                           ) -> TriplePipelineResult:
     """EP1. ``strategy``: 'relational' (codegen self-join plan — the
     default), 'turnlocal' (array-HOF plan, valid for ``dist_in_sents == 0``),
     or 'auto' (= relational).
+
+    ``parsed``: an already materialized parse output (conv_id, turn_idx,
+    n_terms, mentions, frames), e.g. EP2's shared one; EP1 then neither
+    parses nor checkpoints, and ``transcripts``/``persist`` are unused.
+    Relational strategy only.
 
     Why relational is the default: with subset co-partitioning enabled
     (session.py: ``requireAllClusterKeysForCoPartition=false``) the pair
@@ -104,7 +163,7 @@ def build_triple_pipeline(spark: SparkSession,
     expansion join between broadcast and sort-merge. Turn-local remains for
     A/B and for exchange-count-sensitive deployments."""
     cfg = cfg or PipelineConfig()
-    if transcripts is None:
+    if transcripts is None and parsed is None:
         transcripts = spark.read.parquet(inputs.transcripts)
 
     frames_lex = (frames_override if frames_override is not None
@@ -117,6 +176,9 @@ def build_triple_pipeline(spark: SparkSession,
     if strategy == "turnlocal":
         if cfg.dist_in_sents != 0:
             raise ValueError("turnlocal strategy requires dist_in_sents == 0")
+        if parsed is not None:
+            raise ValueError("turnlocal strategy parses in its own closure "
+                             "and takes no pre-parsed frame")
         return _build_turnlocal(spark, inputs, cfg, transcripts, persist,
                                 frames_lex, seed_syn, seed_df)
 
@@ -124,48 +186,11 @@ def build_triple_pipeline(spark: SparkSession,
     conn_map = _connotation_map(frames_lex, cfg)
     frame_annot_live = bool(conn_map) and _os.environ.get(
         "SPARK_KG_FRAME_ANNOT", "1") != "0"
-
-    parsed = parse_transcripts(transcripts, frames_lex, cfg)
-    # Materialize the parse output ONCE — but only when the plan fan-out
-    # warrants it. With the frames branch + J4b annotator live, the triples
-    # DAG consumes the parse from up to 7 branches (mention windows, both
-    # pair-join sides, the frames table, both expansion sides), and AQE
-    # exchange reuse canNOT deduplicate them: per-branch column pruning makes
-    # each branch's exchange subtree non-identical, so the executed plan
-    # re-runs MapInArrow per branch (measured 7x at sf0.1, 16s -> 4-5s after
-    # this checkpoint; 102s -> 62.8s at sf1x8/local[8]). The NO-frames plan
-    # has low fan-out (mentions feed the pair self-join + expansion, all
-    # reusing one conv_id exchange) and the checkpoint write costs more than
-    # the recompute it saves (round-2 regression: kg_triples_noframes 2.68s
-    # -> 4.46s at identical semantics; gated A/B at sf0.1 confirms) — so the
-    # checkpoint is gated on the frames/J4b branch being live.
-    # ``localCheckpoint`` stores the slim row form (no terms column) — unlike
-    # a ``persist``, which builds Spark's columnar cache of the nested
-    # mention arrays at 5-10x the parse cost in alloc/GC CPU. ``eager=
-    # persist`` lets callers that fan out into concurrent writes (runner.py)
-    # materialize up front. At real cluster scale the same role is played by
-    # writing the parse output to a conv_id-bucketed table (checkpoint
-    # blocks are not replicated; lineage is cut deliberately).
-    # SPARK_KG_PARSE_CKPT overrides: 1 forces on, 0 forces off, unset/auto
-    # gates on the frames fan-out.
-    _ckpt_lever = _os.environ.get("SPARK_KG_PARSE_CKPT", "auto")
-    if _ckpt_lever not in ("auto", ""):
-        _warn_nondefault_lever("SPARK_KG_PARSE_CKPT", _ckpt_lever)
     if _os.environ.get("SPARK_KG_FRAME_ANNOT", "1") == "0":
         _warn_nondefault_lever("SPARK_KG_FRAME_ANNOT", "0")
-    do_ckpt = (frame_annot_live if _ckpt_lever in ("auto", "")
-               else _ckpt_lever != "0")
-    if do_ckpt:
-        # Project role away BEFORE materializing: the checkpoint defeats
-        # Catalyst column pruning (it stores every column for all 7
-        # consuming branches), and nothing in EP1 past the parse reads
-        # role — mentions/frames/pairs/expansion key on (conv_id,
-        # turn_idx) only. Without the checkpoint, pruning already removes
-        # it, so the no-ckpt plan needs no change. SPARK_KG_DROP_ROLE=0
-        # reverts for A/B (BASELINE.md).
-        if _os.environ.get("SPARK_KG_DROP_ROLE", "1") != "0":
-            parsed = parsed.drop("role")
-        parsed = parsed.localCheckpoint(eager=persist)
+    if parsed is None:
+        parsed = _checkpointed_parse(transcripts, frames_lex, cfg, persist,
+                                     frame_annot_live)
     mentions = with_group_key(mentions_table(parsed), seed_df,
                               register_missed=cfg.register_missed_synonyms)
     if cfg.entity_type_whitelist is not None:
@@ -270,8 +295,6 @@ def build_samples_pipeline(spark: SparkSession, inputs: KgInputs,
     from .operators.samples import build_samples
 
     cfg = cfg or PipelineConfig()
-    res = build_triple_pipeline(spark, inputs, cfg,
-                                frames_override=frames_override)
     frames_lex = (frames_override if frames_override is not None
                   else FramesLexicon.from_json(inputs.frames))
     # synonym-group / entity-type lookups ride in the parse closure (the
@@ -288,6 +311,18 @@ def build_samples_pipeline(spark: SparkSession, inputs: KgInputs,
                                     types=load_entity_types(
                                         inputs.entity_types),
                                     pos_tagger=pos_tagger)
+    # ONE parse serves both EP1 and the masking. The annotated parse is a
+    # superset of EP1's slim one (same n_terms, mention positions/values and
+    # frames; mentions_table reads only pos/value), so EP1 gets its
+    # projection without terms. The checkpoint stores plain rows (no
+    # columnar cache build, see _checkpointed_parse) and is read by every
+    # EP1 branch plus the terms join — without it each branch would re-run
+    # the Arrow parse, since their pruned subtrees never share an exchange.
+    parsed_full = parsed_full.drop("role").localCheckpoint()
+    res = build_triple_pipeline(
+        spark, inputs, cfg, frames_override=frames_lex,
+        parsed=parsed_full.select("conv_id", "turn_idx", "n_terms",
+                                  "mentions", "frames"))
     triples_pos = res.text_opinions.select(
         "conv_id", F.col("s_turn").alias("turn_idx"),
         "s_ent_id", "t_ent_id", "s_group", "t_group", "label",

@@ -24,6 +24,7 @@ import os
 import time
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -242,9 +243,12 @@ def run_bucket(spark: SparkSession, inputs: KgInputs, cfg: PipelineConfig,
     }
     # lineage append LAST — commit point of the bucket; num_buckets rides
     # along so a resume under a DIFFERENT bucket count fails loudly
-    # (completed_buckets) instead of silently mispartitioning the work
+    # (completed_buckets) instead of silently mispartitioning the work.
+    # A pandas frame takes the Arrow path to a JVM-only LocalTableScan; a
+    # Python list would become a Python RDD, and the coalesce(1) append
+    # would run 3-4 Python worker tasks one after another to write one row.
     sink.append(spark.createDataFrame(
-        [metrics],
+        pd.DataFrame([metrics]),
         "bucket int, num_buckets int, status string, n_turns long, "
         "n_mentions long, n_triples long, n_opinions long, n_convs long, "
         "n_groups long, wall_sec double"), "lineage")

@@ -1,9 +1,14 @@
 """Benchmark harness (driver contract).
 
 Default: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. It prints a ``# protocol``
+line (per-query CPU steal, timing rule) and then, as its LAST line, one
+compact headline JSON object well under 1 kB, so a fixed-length tail capture
+always holds it whole:
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {...}, "sf": ..., "turns_per_sec": ...}
+The at-scale evidence (skew, stream resume, materialized sink, scaling)
+stays in its own ``BENCH_*.json`` file.
 
 ``--scaling`` additionally runs the flagship KG pipeline at CPU-pinned
 local[2] / local[8] / local[32] on the SAME input and reports throughput at
@@ -278,14 +283,15 @@ def main() -> None:
         "sf": _sf_of(SF_DIR),
         "turns": turns,
         "turns_per_sec": round(turns / flag, 1) if flag > 0 else None,
-        "protocol": {"warmup": "one sf0.001 flagship run",
-                     "shuffle_dir": "tmpfs" if _tmpfs_local_dir() else "disk",
-                     "timing": "per-query first attempt with /proc/stat "
-                               "steal <5% (<=3 attempts; min-of-attempts "
-                               "fallback only when none is quiet)",
-                     "steal_frac": steals,
-                     "min_fallback_queries": fallbacks},
+        "max_steal_frac": max(steals.values(), default=0.0),
+        "min_fallback_queries": fallbacks,
     }
+    protocol = {"warmup": "one sf0.001 flagship run",
+                "shuffle_dir": "tmpfs" if _tmpfs_local_dir() else "disk",
+                "timing": "per-query first attempt with /proc/stat "
+                          "steal <5% (<=3 attempts; min-of-attempts "
+                          "fallback only when none is quiet)",
+                "steal_frac": steals}
 
     if scaling:
         import pyarrow.parquet as pq
@@ -350,29 +356,12 @@ def main() -> None:
         }
         with open(os.path.join(REPO, "BENCH_SCALING.json"), "w") as f:
             json.dump(scaling_out, f, indent=1)
-        out["scaling"] = scaling_out
+        out["scaling_efficiency"] = {
+            k: v["scaling_efficiency"]
+            for k, v in scaling_out["pairs"].items()}
 
-    # Materialized-analytics split (VERDICT r4 item 3): sink-write wall vs
-    # analytics-read wall at sf1x8, recorded by tools/bench_materialized.py
-    # (too heavy to re-run per bench invocation — the write phase alone is
-    # ~2 min at local[8]); embedded so the per-round BENCH snapshot carries
-    # the two-step deployment-shape numbers.
-    mat_path = os.path.join(REPO, "BENCH_MATERIALIZED.json")
-    if os.path.exists(mat_path):
-        with open(mat_path) as f:
-            out["materialized"] = json.load(f)
-
-    # Same embedding for the other round-5 at-scale evidence (planted-skew
-    # stress, streaming kill/resume) — recorded by their tools/bench_*.py
-    # scripts, too heavy to re-run per invocation.
-    for key, fname in (("skew", "BENCH_SKEW.json"),
-                       ("stream_resume", "BENCH_STREAM_RESUME.json")):
-        p = os.path.join(REPO, fname)
-        if os.path.exists(p):
-            with open(p) as f:
-                out[key] = json.load(f)
-
-    print(json.dumps(out))
+    print("# protocol " + json.dumps(protocol))
+    print(json.dumps(out, separators=(",", ":")))
 
 
 if __name__ == "__main__":

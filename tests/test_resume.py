@@ -73,7 +73,21 @@ def test_rerun_is_noop(spark, sf0001_dir, tmp_path):
     assert again == []
 
 
-def test_lineage_metrics(spark, sf0001_dir, tmp_path):
+def test_lineage_metrics(spark, sf0001_dir, tmp_path, monkeypatch):
+    """Lineage rows are written per bucket, and each appended row is a
+    LocalTableScan: no PythonRDD in its RDD lineage (no Python worker task
+    to write one row), with the declared schema, nullability included."""
+    from pyspark.sql.types import (DoubleType, IntegerType, LongType,
+                                   StringType, StructField, StructType)
+
+    appended = []
+    append = GraphSink.append
+
+    def spy(self, df, name):
+        appended.append((name, df))
+        append(self, df, name)
+
+    monkeypatch.setattr(GraphSink, "append", spy)
     inputs = KgInputs.at(sf0001_dir)
     sink = str(tmp_path / "sink")
     metrics = run_incremental(spark, inputs, sink, num_buckets=2)
@@ -83,6 +97,18 @@ def test_lineage_metrics(spark, sf0001_dir, tmp_path):
     lineage = spark.read.parquet(GraphSink(sink).lineage)
     assert lineage.count() == 2
     assert os.path.exists(GraphSink(sink).edges)
+
+    assert [name for name, _ in appended] == ["lineage", "lineage"]
+    declared = StructType([StructField(n, t, True) for n, t in (
+        ("bucket", IntegerType()), ("num_buckets", IntegerType()),
+        ("status", StringType()), ("n_turns", LongType()),
+        ("n_mentions", LongType()), ("n_triples", LongType()),
+        ("n_opinions", LongType()), ("n_convs", LongType()),
+        ("n_groups", LongType()), ("wall_sec", DoubleType()))])
+    for _, df in appended:
+        debug = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in debug, debug
+        assert df.schema == declared
 
 
 def test_format_seam_partition_overwrite_idempotent(spark, tmp_path):

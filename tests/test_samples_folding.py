@@ -76,6 +76,48 @@ def test_samples_schema_and_masking(spark, sf0001_dir):
             types.get(terms[i].text, "") for i in ent_inds)
 
 
+def test_samples_parse_once_per_turn(spark, sf0001_dir, monkeypatch):
+    """EP2 shares one parse between the triples and the masking: the parse
+    kernel sees every turn exactly once, with and without the frames
+    branch."""
+    from arekit_r335_spark.lexicons import FramesLexicon
+    from arekit_r335_spark.operators import parse as parse_mod
+
+    acc = spark.sparkContext.accumulator(0)
+    make = parse_mod.make_parse_func
+
+    def counting_make(*args, **kwargs):
+        fn = make(*args, **kwargs)
+
+        def counted(batches):
+            def tally():
+                for b in batches:
+                    acc.add(b.num_rows)
+                    yield b
+            return fn(tally())
+        return counted
+
+    monkeypatch.setattr(parse_mod, "make_parse_func", counting_make)
+    inputs = KgInputs.at(sf0001_dir)
+    n_turns = spark.read.parquet(inputs.transcripts).count()
+    for frames in (None, FramesLexicon.empty()):
+        acc.value = 0
+        (build_samples_pipeline(spark, inputs, frames_override=frames)
+         .write.format("noop").mode("overwrite").save())
+        assert acc.value == n_turns
+
+
+def test_triples_turnlocal_rejects_parsed(spark, sf0001_dir):
+    import pytest
+
+    from arekit_r335_spark.pipeline import build_triple_pipeline
+
+    with pytest.raises(ValueError, match="pre-parsed"):
+        build_triple_pipeline(spark, KgInputs.at(sf0001_dir),
+                              strategy="turnlocal",
+                              parsed=spark.range(1).toDF("conv_id"))
+
+
 def test_samples_balance(spark, sf0001_dir):
     from arekit_r335_spark.operators.samples import balance_by_label
     samples = build_samples_pipeline(spark, KgInputs.at(sf0001_dir))

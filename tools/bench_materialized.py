@@ -16,9 +16,9 @@ a cold JVM (no shared block cache with the write phase):
     python tools/bench_materialized.py --phase write <sink_dir> <out.json>
     python tools/bench_materialized.py --phase read  <sink_dir> <out.json>
 
-Output: ``BENCH_MATERIALIZED.json`` at the repo root; ``bench.py`` embeds
-it under a ``materialized`` key so the per-round BENCH snapshot carries
-the write/read split.
+Output: ``BENCH_MATERIALIZED.json`` at the repo root, the record of the
+write/read split (``bench.py`` keeps its headline line compact and does not
+embed it).
 """
 
 from __future__ import annotations
