@@ -361,11 +361,12 @@ def parse_transcripts(transcripts, frames: FramesLexicon, cfg: PipelineConfig,
     # input splits than cores (at real scale the Iceberg table is bucketed by
     # conv_id and this becomes a no-op repartition to the bucket count).
     # No partition count is given, so the shuffle is REPARTITION_BY_COL and
-    # AQE sizes the parse stage from the bytes it observes (coalescing to
-    # minPartitionSize, at least one task per core on a large input) —
-    # every Python task carries a fixed worker cost (~0.26 s of CPU on a
-    # 4-CPU host) regardless of its row count, so a small input must not
-    # fan out to shuffle.partitions tasks. With AQE off (streaming) this is
+    # AQE sizes the parse stage from the bytes it observes (target size:
+    # input bytes / cores, but at least minPartitionSize, so a small input
+    # gets one task and a large one at least one per core) — every Python
+    # task carries a fixed worker cost (~0.26 s of CPU on a 4-CPU host)
+    # regardless of its row count, so a small input must not fan out to
+    # shuffle.partitions tasks. With AQE off (streaming) this is
     # shuffle.partitions partitions, as with an explicit count.
     # The hash does NOT pre-align the downstream per-conv windows: Catalyst
     # cannot see the partitioning of MapInArrow's output, so the executed
