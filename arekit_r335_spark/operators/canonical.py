@@ -1,6 +1,6 @@
 """J7b — cross-corpus entity canonicalization: connected components over
-synonym-group keys (iterative DataFrame joins with checkpointing + salted
-two-phase aggregation), per the north rule and SURVEY.md §4 items 1-2.
+synonym-group keys (iterative DataFrame joins with checkpointing), per the
+north rule and SURVEY.md §4 items 1-2.
 
 Reference semantics being generalized: ``SynonymsCollection`` merges values
 into groups via shared sids (``common/synonyms/base.py:109-126`` — a value
@@ -11,33 +11,27 @@ connected components are the canonical nodes of the knowledge graph.
 
 Algorithm: iterative min-label propagation —
     comp(v) <- min(comp(v), min over neighbors u of comp(u))
-until fixpoint. Each iteration is one shuffle join + aggregation;
-``localCheckpoint()`` truncates the growing lineage (required for iterative
-DataFrame loops); the min-aggregation is two-phase salted so a celebrity node
-with millions of alias edges cannot pin a single reducer (on top of Spark's
-map-side partial aggregation; AQE skew-join handles the join side).
-Iterations are bounded by the component diameter, which for entity-alias
+until fixpoint. Each iteration is one shuffle join + aggregation, and its
+eager ``localCheckpoint()`` truncates the growing lineage (required for
+iterative DataFrame loops). The fixpoint test rides on that checkpoint: an
+``Observation`` counts the nodes whose label dropped, so the loop stops at
+the first iteration that changes nothing, with no extra job. A celebrity
+node with millions of alias edges does not pin one reducer: ``min`` is
+partially aggregated on the map side, so each node reaches its reducer at
+most once per map task (AQE skew-join handles the join side). Iterations
+are bounded by the component diameter plus one, which for entity-alias
 graphs is tiny; ``max_iter`` guards pathological chains.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
-def connected_components(edges: DataFrame, max_iter: int = 25,
-                         salt: int = 16, check_every: int = 3) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """edges(src, dst) [string node ids, undirected interpretation] ->
-    (node, component) with component = min node id of the component.
-
-    The fixpoint test (a ``limit(1).count()`` driver action) runs every
-    ``check_every`` iterations, not every iteration: min-label propagation
-    is idempotent past the fixpoint, so overshooting by <= check_every-1
-    no-op iterations is semantically free and cuts the per-iteration driver
-    round-trips 3x on deep alias chains (round-3 verdict item 9).  Alias
-    graphs have tiny diameters, so the common case is ONE check at
-    iteration 3 instead of three."""
+    (node, component) with component = min node id of the component."""
     sym = (edges.selectExpr("src AS a", "dst AS b")
            .unionByName(edges.selectExpr("dst AS a", "src AS b"))
            .filter(F.col("a") != F.col("b"))
@@ -49,36 +43,26 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
             .withColumn("component", F.col("node"))
             .localCheckpoint())
 
-    for it in range(max_iter):
+    for _ in range(max_iter):
         # neighbor's current component flows across each edge
         nbr = (sym.join(comp.withColumnRenamed("node", "b")
                         .withColumnRenamed("component", "nbr_comp"), "b")
                .select(F.col("a").alias("node"), F.col("nbr_comp")))
-        # salted two-phase min: (node, salt-bucket) partial min, then final
-        partial = (nbr
-                   .withColumn("__salt", F.pmod(F.xxhash64("nbr_comp"),
-                                                F.lit(salt)))
-                   .groupBy("node", "__salt")
-                   .agg(F.min("nbr_comp").alias("m")))
-        candidate = partial.groupBy("node").agg(F.min("m").alias("nbr_min"))
+        candidate = nbr.groupBy("node").agg(F.min("nbr_comp").alias("nbr_min"))
 
-        updated = (comp.join(candidate, "node", "left")
-                   .select("node",
-                           F.least(F.col("component"),
-                                   F.coalesce(F.col("nbr_min"),
-                                              F.col("component")))
-                           .alias("component"))
-                   .localCheckpoint())
-
-        prev = comp
-        comp = updated
-        if (it + 1) % check_every == 0 or it == max_iter - 1:
-            changed = (updated.alias("u")
-                       .join(prev.alias("c"), "node")
-                       .filter(F.col("u.component") != F.col("c.component"))
-                       .limit(1).count())
-            if changed == 0:
-                break
+        changed = Observation()
+        comp = (comp.join(candidate, "node", "left")
+                .observe(changed, F.count(F.when(
+                    F.col("nbr_min") < F.col("component"), 1))
+                    .alias("n"))
+                .select("node",
+                        F.least(F.col("component"),
+                                F.coalesce(F.col("nbr_min"),
+                                           F.col("component")))
+                        .alias("component"))
+                .localCheckpoint())
+        if changed.get["n"] == 0:
+            break
     return comp
 
 

@@ -103,11 +103,13 @@ def _checkpointed_parse(transcripts: DataFrame, frames_lex: FramesLexicon,
     checkpoint is gated on the frames/J4b branch being live.
     ``localCheckpoint`` stores the slim row form (no terms column) — unlike
     a ``persist``, which builds Spark's columnar cache of the nested
-    mention arrays at 5-10x the parse cost in alloc/GC CPU. ``eager=
-    persist`` lets callers that fan out into concurrent writes (runner.py)
-    materialize up front. At real cluster scale the same role is played by
-    writing the parse output to a conv_id-bucketed table (checkpoint
-    blocks are not replicated; lineage is cut deliberately).
+    mention arrays at 5-10x the parse cost in alloc/GC CPU. With ``persist``
+    (the runner) the checkpoint is eager, so the parse runs up front and
+    the member checkpoints of ``build_triple_pipeline`` read its rows;
+    otherwise it is lazy and the first action that reads the parse writes
+    it. At real cluster scale the same role is played by writing the parse
+    output to a conv_id-bucketed table (checkpoint blocks are not
+    replicated; lineage is cut deliberately).
     SPARK_KG_PARSE_CKPT overrides: 1 forces on, 0 forces off, unset/auto
     gates on the frames fan-out."""
     import os as _os
@@ -138,16 +140,33 @@ def build_triple_pipeline(spark: SparkSession,
                           persist: bool = True,
                           frames_override: FramesLexicon | None = None,
                           strategy: str = "auto",
-                          parsed: DataFrame | None = None
+                          parsed: DataFrame | None = None,
+                          seed_opinions: DataFrame | None = None
                           ) -> TriplePipelineResult:
     """EP1. ``strategy``: 'relational' (codegen self-join plan — the
     default), 'turnlocal' (array-HOF plan, valid for ``dist_in_sents == 0``),
     or 'auto' (= relational).
 
+    ``persist`` is for callers that run several actions on one result (the
+    runner writes edges, opinions and node partials from it). The parse
+    checkpoint, when gated on, is then eager, and the ``mentions`` and
+    ``doc_opinions`` members are eagerly ``localCheckpoint``ed: each one
+    feeds more than one write, and ``text_opinions``/``triples`` are
+    expanded from the checkpoints, so no write re-runs the mention windows,
+    the pair self-join or the annotators. Both are flat rows, so the
+    checkpoint stays cheap. Single-action callers pass ``persist=False``
+    and get one lazy plan.
+
     ``parsed``: an already materialized parse output (conv_id, turn_idx,
     n_terms, mentions, frames), e.g. EP2's shared one; EP1 then neither
-    parses nor checkpoints, and ``transcripts``/``persist`` are unused.
+    parses nor checkpoints the parse, and ``transcripts`` is unused.
     Relational strategy only.
+
+    ``seed_opinions``: the predefined annotator's seed table (default: read
+    from ``inputs.seed_opinions``). The runner passes it already filtered to
+    its bucket, so the bucket's doc opinions hold only its own
+    conversations; keep-first partitions by ``conv_id``, so filtering the
+    seed first is output-neutral.
 
     Why relational is the default: with subset co-partitioning enabled
     (session.py: ``requireAllClusterKeysForCoPartition=false``) the pair
@@ -165,6 +184,8 @@ def build_triple_pipeline(spark: SparkSession,
     cfg = cfg or PipelineConfig()
     if transcripts is None and parsed is None:
         transcripts = spark.read.parquet(inputs.transcripts)
+    if seed_opinions is None:
+        seed_opinions = spark.read.parquet(inputs.seed_opinions)
 
     frames_lex = (frames_override if frames_override is not None
                   else FramesLexicon.from_json(inputs.frames))
@@ -180,7 +201,7 @@ def build_triple_pipeline(spark: SparkSession,
             raise ValueError("turnlocal strategy parses in its own closure "
                              "and takes no pre-parsed frame")
         return _build_turnlocal(spark, inputs, cfg, transcripts, persist,
-                                frames_lex, seed_syn, seed_df)
+                                frames_lex, seed_syn, seed_df, seed_opinions)
 
     import os as _os
     conn_map = _connotation_map(frames_lex, cfg)
@@ -202,12 +223,13 @@ def build_triple_pipeline(spark: SparkSession,
             mentions, spark, load_entity_types(inputs.entity_types))
         mentions = mentions.filter(
             F.col("ent_type").isin(list(cfg.entity_type_whitelist)))
+    if persist:
+        mentions = mentions.localCheckpoint()
 
     pairs = candidate_pairs(mentions, cfg)
     frames_df = frames_table(parsed)
 
-    seed_ops = spark.read.parquet(inputs.seed_opinions)
-    predefined = predefined_doc_opinions(seed_ops, seed_df)
+    predefined = predefined_doc_opinions(seed_opinions, seed_df)
     # canonical wiring passes get_doc_existed_opinions_func = None for the
     # nolabel annotator (rusentrel/extract_text_opinions.py:78) -> no J3
     # existed-opinion exclusion; exclude_existed() stays available for the
@@ -219,6 +241,8 @@ def build_triple_pipeline(spark: SparkSession,
     frame_ops = (frame_doc_opinions(pairs, frames_df, conn_map)
                  if frame_annot_live else None)
     doc_opinions = union_annotators(predefined, nolabel, frame_ops)
+    if persist:
+        doc_opinions = doc_opinions.localCheckpoint()
 
     expanded = expand_to_text_opinions(doc_opinions, mentions, cfg)
     text_opinions = dedup_across_annotators(expanded)
@@ -236,7 +260,8 @@ def build_triple_pipeline(spark: SparkSession,
 def _build_turnlocal(spark: SparkSession, inputs: KgInputs,
                      cfg: PipelineConfig, transcripts: DataFrame,
                      persist: bool, frames_lex: FramesLexicon,
-                     seed_syn, seed_df: DataFrame) -> TriplePipelineResult:
+                     seed_syn, seed_df: DataFrame,
+                     seed_opinions: DataFrame) -> TriplePipelineResult:
     """One-shuffle EP1 (operators/turnlocal.py): the synonym-seed (J7a) and
     entity-type (J12) lookups ride inside the parse closure; every stage
     after the single conv_id repartition is exchange-free."""
@@ -258,8 +283,7 @@ def _build_turnlocal(spark: SparkSession, inputs: KgInputs,
     # BlockManager locks. Recompute beats remember for this shape.
     del persist
 
-    seed_ops = spark.read.parquet(inputs.seed_opinions)
-    predefined = predefined_doc_opinions(seed_ops, seed_df)
+    predefined = predefined_doc_opinions(seed_opinions, seed_df)
     nolabel = tl.nolabel_doc_opinions_local(annotated, cfg)
     conn_map = _connotation_map(frames_lex, cfg)
     frame_ops = (tl.frame_doc_opinions_local(annotated, cfg, conn_map)
@@ -320,7 +344,7 @@ def build_samples_pipeline(spark: SparkSession, inputs: KgInputs,
     # the Arrow parse, since their pruned subtrees never share an exchange.
     parsed_full = parsed_full.drop("role").localCheckpoint()
     res = build_triple_pipeline(
-        spark, inputs, cfg, frames_override=frames_lex,
+        spark, inputs, cfg, persist=False, frames_override=frames_lex,
         parsed=parsed_full.select("conv_id", "turn_idx", "n_terms",
                                   "mentions", "frames"))
     triples_pos = res.text_opinions.select(

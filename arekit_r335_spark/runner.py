@@ -13,8 +13,13 @@ and metrics. Realization:
   lineage row LAST — a bucket is "done" only once its lineage row exists, so
   a crash between the data write and the lineage append simply re-runs the
   bucket and overwrites the same partition.
-* metrics: row counts in/out per stage captured via ``Observation`` on the
-  write action (no extra jobs) and stored next to lineage.
+* the bucket's mentions and doc opinions are checkpointed once, eagerly
+  (``build_triple_pipeline(persist=True)``); the edges, opinions and node
+  partial writes read those rows, so none re-runs the parse, the mention
+  windows, the pair self-join or the annotators.
+* metrics: row counts per stage captured via ``Observation`` on actions
+  the bucket runs anyway — the parse checkpoint and the sink writes (no
+  extra jobs) — and stored next to lineage.
 """
 
 from __future__ import annotations
@@ -107,10 +112,11 @@ class GraphSink:
                 return
             df.writeTo(self.path(name)).overwritePartitions()
             return
-        df.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (df.write.mode("overwrite").partitionBy(partition_col)
-         .parquet(self.path(name)))
+        # a per-write option, not the session conf: a session-wide dynamic
+        # mode would turn the caller's later overwrites dynamic too
+        (df.write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
+         .partitionBy(partition_col).parquet(self.path(name)))
 
     def write_overwrite(self, df: DataFrame, name: str) -> None:
         if self.fmt == "iceberg":
@@ -178,14 +184,20 @@ def run_bucket(spark: SparkSession, inputs: KgInputs, cfg: PipelineConfig,
     t0 = time.time()
     # n_turns rides as an Observation on the scan (no dedicated count job:
     # the value is captured by whichever action first materializes the parse
-    # — the eager checkpoint, or the edges write when checkpointing is off)
+    # — its eager checkpoint, or the mentions checkpoint when the parse
+    # checkpoint is gated off)
     tobs = Observation(f"turns_b{bucket}")
-    transcripts = (spark.read.parquet(inputs.transcripts)
-                   .filter(bucket_of(F.col("conv_id"), num_buckets)
-                           == bucket)
+    in_bucket = bucket_of(F.col("conv_id"), num_buckets) == bucket
+    transcripts = (spark.read.parquet(inputs.transcripts).filter(in_bucket)
                    .observe(tobs, F.count(F.lit(1)).alias("n_turns")))
-    res = build_triple_pipeline(spark, inputs, cfg, transcripts=transcripts,
-                                persist=True)
+    # the seed table is filtered too: the predefined annotator would
+    # otherwise put every seed conv's opinions into this bucket's
+    # checkpointed doc opinions (they join no mention outside the bucket,
+    # so triples are unaffected, but the opinions write would carry them)
+    res = build_triple_pipeline(
+        spark, inputs, cfg, transcripts=transcripts, persist=True,
+        seed_opinions=spark.read.parquet(inputs.seed_opinions)
+        .filter(in_bucket))
 
     obs = Observation(f"edges_b{bucket}")
     edges = (res.triples
@@ -198,13 +210,8 @@ def run_bucket(spark: SparkSession, inputs: KgInputs, cfg: PipelineConfig,
     # the deduped, aggregatable granularity downstream analytics consume —
     # per-bucket complete because opinions are per-conv and buckets
     # partition conv_ids, so the union over buckets IS the full table
-    # bucket-filter the opinions: the predefined annotator reads the seed
-    # table unfiltered (its rows join no mention outside the bucket, so
-    # triples are unaffected) — without this predicate every bucket would
-    # re-write every seed conv's predefined opinions
     oobs = Observation(f"ops_b{bucket}")
     ops = (res.doc_opinions
-           .filter(bucket_of(F.col("conv_id"), num_buckets) == bucket)
            .withColumn("bucket", F.lit(bucket))
            .observe(oobs, F.count(F.lit(1)).alias("n_opinions")))
     sink.write_overwrite_partitions(ops, "opinions")
@@ -213,9 +220,10 @@ def run_bucket(spark: SparkSession, inputs: KgInputs, cfg: PipelineConfig,
     # (the cross-bucket canonical merge happens once in finalize_nodes —
     # partials keep the per-bucket unit idempotent and restart-safe)
     nobs = Observation(f"nodes_b{bucket}")
-    # n_mentions rides on the partial write's scan of the mention table —
-    # together with n_turns above this removes the round-2 runner's two
-    # dedicated per-bucket count() jobs (one job per write, as S12 intends)
+    # n_mentions rides on the partial write's scan of the mentions
+    # checkpoint (a read of materialized rows, no recompute) — together with
+    # n_turns above this removes the round-2 runner's two dedicated
+    # per-bucket count() jobs
     mobs = Observation(f"mentions_b{bucket}")
     partial = (res.mentions
                .observe(mobs, F.count(F.lit(1)).alias("n_mentions"))

@@ -56,3 +56,25 @@ def test_canonical_nodes_rollup(spark):
     assert nodes["g0"] == (["g0"], 2)
     assert nodes["u:deepmind"] == (["u:deepmind", "u:dm"], 2) or \
         nodes["u:deepmind"][1] == 2
+
+
+def test_cc_stops_at_first_round_without_change(spark, monkeypatch):
+    """The fixpoint test rides on each round's checkpoint: a diameter-1
+    graph converges in round 1 and stops after round 2 changes nothing,
+    with no overshoot rounds."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    ckpt = DataFrame.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        calls.append(self.columns)
+        return ckpt(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", spy)
+    assert cc(spark, [("x", "y")]) == {"x": "x", "y": "x"}
+    # one checkpoint each for the symmetric edge list and the initial
+    # labels, then one per propagation round
+    assert calls[0] == ["a", "b"]
+    rounds = len(calls) - 2
+    assert rounds == 2
